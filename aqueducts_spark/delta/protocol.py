@@ -1231,7 +1231,8 @@ class DeltaProtocolTable:
             for fpath in sorted(stage.rglob("*.parquet")):
                 if fpath.name.startswith("."):
                     continue
-                if pq.ParquetFile(fpath).metadata.num_rows == 0:
+                meta = pq.read_metadata(fpath)  # the one footer read
+                if meta.num_rows == 0:
                     continue  # empty task outputs never become add actions
                 rel = fpath.relative_to(stage)
                 if subdir:
@@ -1253,7 +1254,7 @@ class DeltaProtocolTable:
                     "dataChange": data_change,
                 }
                 if with_stats:
-                    action["stats"] = _file_stats(target)
+                    action["stats"] = _file_stats(meta)
                 adds.append(action)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1355,7 +1356,14 @@ class DeltaProtocolTable:
         caller passes ``change_df`` (table columns + ``_change_type``):
         it is staged under ``_change_data/`` and committed as ``cdc``
         actions per the spec — CDF readers then use those exclusively
-        for this commit instead of deriving from add/remove."""
+        for this commit instead of deriving from add/remove.
+
+        The merged plan runs once, inside the staging write (a
+        constraint violation surfaces there as ``DeltaProtocolError``).
+        On a partitioned table it is first rebalanced on the partition
+        columns, as delta-spark's MERGE does, so each partition value is
+        written as one file and AQE splits a value too large for one.  An
+        unpartitioned table keeps the merged plan's partitioning."""
         cdc_actions: list[dict] = []
         if change_df is not None:
             # stage the change feed FIRST: an empty change_df (empty
@@ -1375,7 +1383,12 @@ class DeltaProtocolTable:
             if not cdc_actions:
                 return snap.version
         try:
-            merged = self._checkpoint_enforced(merged)
+            part_cols = snap.partition_columns()
+            if part_cols:
+                merged = merged.hint(
+                    "rebalance",
+                    *[F.col("`" + c.replace("`", "``") + "`") for c in part_cols],
+                )
             adds = self._stage_physical(merged, snap)
         except Exception:
             # cdc files are already inside _change_data/, which vacuum
@@ -1948,11 +1961,17 @@ def _partition_values_from_path(rel: Path, part_cols: list[str]) -> dict:
 _STATS_MINMAX_TYPES = (int, float)
 
 
-def _file_stats(path: Path) -> str:
+def _file_stats(source: Path | pq.FileMetaData) -> str:
     """Per-file stats JSON: numRecords always; nullCount and numeric /
     date min-max from parquet row-group statistics (strings and nested
-    types are skipped rather than risking wrong pruning in readers)."""
-    meta = pq.ParquetFile(path).metadata
+    types are skipped rather than risking wrong pruning in readers).
+    ``_stage_files`` passes the footer it has already read; the path
+    form is kept only for the unit test of this function."""
+    meta = (
+        source
+        if isinstance(source, pq.FileMetaData)
+        else pq.read_metadata(source)
+    )
     num_records = meta.num_rows
     null_counts: dict[str, int] = {}
     mins: dict[str, Any] = {}

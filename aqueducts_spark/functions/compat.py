@@ -41,6 +41,8 @@ import re as _re
 
 from pyspark.sql import SparkSession
 
+from ..session import once_per_session
+
 # --- 1. fixed-signature functions as inlined SQL UDFs ---------------------
 
 _SQL_UDFS: dict[str, str] = {
@@ -149,11 +151,15 @@ _SQL_UDFS: dict[str, str] = {
 }
 
 
+@once_per_session
 def register_compat_functions(spark: SparkSession) -> None:
-    """Register the DataFusion-name SQL UDFs on this session.
+    """Register the DataFusion-name SQL UDFs on this session, once per
+    JVM session (``once_per_session``): a later call on the same session
+    does nothing, so a pack function that user or stage SQL redefines or
+    drops afterwards stays that way on that session.
 
-    Idempotent (CREATE OR REPLACE); every definition is a pure SQL
-    expression, so Catalyst inlines it — no Python round-trip.
+    Every definition is a pure SQL expression (CREATE OR REPLACE), so
+    Catalyst inlines it — no Python round-trip.
     """
     for ddl in _SQL_UDFS.values():
         spark.sql(ddl)

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .._shipping import ship_module_by_value
+from ..session import once_per_session
 
 # the UDF bodies reference module-level helpers (_walk & co) — ship
 # them by value so executors never need this package importable
@@ -134,8 +135,12 @@ def _series_map(f):
     return inner
 
 
+@once_per_session
 def register_udfs(spark: SparkSession) -> None:
-    """Register the function pack on a session (idempotent)."""
+    """Register the function pack on a session, once per JVM session
+    (``once_per_session``): a later call on the same session does
+    nothing, so a pack function that user or stage SQL redefines or
+    drops afterwards stays that way on that session."""
     spark.udf.register(
         "unnest_json_array",
         pandas_udf(_unnest_json_array_batch, T.ArrayType(T.StringType())),

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..session import once_per_session
+
 __all__ = ["make_udafs", "register_udafs"]
 
 _CACHE: dict = {}
@@ -68,7 +70,11 @@ def make_udafs() -> dict:
     return _CACHE
 
 
+@once_per_session
 def register_udafs(spark: SparkSession) -> None:
-    """Register the grouped-agg UDAFs for stage SQL."""
+    """Register the grouped-agg UDAFs for stage SQL, once per JVM
+    session (``once_per_session``): a later call on the same session
+    does nothing, so a pack function that user or stage SQL redefines or
+    drops afterwards stays that way on that session."""
     for name, udf in make_udafs().items():
         spark.udf.register(name, udf)

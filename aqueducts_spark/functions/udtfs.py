@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
 from .._shipping import ship_module_by_value
+from ..session import once_per_session
 
 # UDTF classes are cloudpickled; ship this module by value so executors
 # never need the package importable (same contract as json_udfs.py)
@@ -60,8 +61,12 @@ class _ParseKeyValues:
 _CACHE: dict = {}
 
 
+@once_per_session
 def register_udtfs(spark: SparkSession) -> None:
-    """Register the UDTF pack for SQL use (idempotent).
+    """Register the UDTF pack for SQL use, once per JVM session
+    (``once_per_session``): a later call on the same session does
+    nothing, so a pack function that user or stage SQL redefines or
+    drops afterwards stays that way on that session.
 
     The ``@udtf`` wrapping happens HERE, lazily, not at import time:
     the decorator freezes the Arrow-optimization decision from the

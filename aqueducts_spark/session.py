@@ -13,8 +13,10 @@ The settings here are the scale-relevant ones:
 
 from __future__ import annotations
 
+import functools
 import os
 import re
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -67,3 +69,24 @@ def session_builder(app_name: str = "aqueducts_spark", master: str | None = None
 
 def get_spark(app_name: str = "aqueducts_spark", master: str | None = None) -> SparkSession:
     return session_builder(app_name, master).getOrCreate()
+
+
+def once_per_session(
+    register: Callable[[SparkSession], None],
+) -> Callable[[SparkSession], None]:
+    """Make ``register(spark)`` run once per JVM session: on a session
+    it already served it returns at once, with no py4j call.  The key is
+    the py4j id of the session's JVM object, which the gateway never
+    reuses, so ``spark.newSession()`` and a session rebuilt after
+    ``stop()`` register again.  Nothing a later caller does to the
+    registered objects on a served session is undone."""
+    served: set[str] = set()
+
+    @functools.wraps(register)
+    def wrapper(spark: SparkSession) -> None:
+        key = spark._jsparkSession._target_id
+        if key not in served:
+            register(spark)
+            served.add(key)
+
+    return wrapper

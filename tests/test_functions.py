@@ -224,3 +224,92 @@ def test_parse_key_values_malformed_separators_skip_not_crash(spark):
         "SELECT * FROM parse_key_values('a=1,b=2', ',', '=') ORDER BY key"
     ).collect()
     assert [(r.key, r.value) for r in rows] == [("a", "1"), ("b", "2")]
+
+
+REGISTRARS = [
+    "register_udfs",
+    "register_compat_functions",
+    "register_udtfs",
+    "register_udafs",
+]
+
+
+def _count_registration_py4j(monkeypatch) -> dict:
+    """Count the py4j round trips made inside the pipeline's four
+    ``register_*`` calls."""
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    from aqueducts_spark import pipeline
+
+    state = {"inside": 0, "calls": 0}
+    for cls in (
+        py4j.clientserver.ClientServerConnection,
+        py4j.java_gateway.GatewayConnection,
+    ):
+        def send(self, *a, _orig=cls.send_command, **kw):
+            if state["inside"]:
+                state["calls"] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, "send_command", send)
+    for name in REGISTRARS:
+        def wrapped(spark, _orig=getattr(pipeline, name)):
+            state["inside"] += 1
+            try:
+                return _orig(spark)
+            finally:
+                state["inside"] -= 1
+
+        monkeypatch.setattr(pipeline, name, wrapped)
+    return state
+
+
+def test_pipeline_registers_function_pack_once_per_session(spark, monkeypatch):
+    from aqueducts_spark import load_pipeline_str, run_pipeline
+
+    session = spark.newSession()
+    session.createDataFrame([(1,)], "a int").createOrReplaceTempView("reg_src")
+    pipe = load_pipeline_str(
+        """
+sources:
+  - type: in_memory
+    name: reg_src
+stages:
+  - name: reg_out
+    query: SELECT a FROM reg_src
+"""
+    )
+    state = _count_registration_py4j(monkeypatch)
+    run_pipeline(session, pipe)
+    first = state["calls"]
+    assert first > 0
+    result = run_pipeline(session, pipe)
+    assert state["calls"] == first
+    assert result.result.collect()[0].a == 1
+
+
+def test_new_session_gets_the_function_pack(spark):
+    from aqueducts_spark import load_pipeline_str, run_pipeline
+    from aqueducts_spark.functions import register_compat_functions
+
+    register_compat_functions(spark)  # the parent session is served
+    fresh = spark.newSession()
+    fresh.createDataFrame([('{"k":"v"}',)], "j string").createOrReplaceTempView(
+        "reg_json"
+    )
+    result = run_pipeline(
+        fresh,
+        load_pipeline_str(
+            """
+sources:
+  - type: in_memory
+    name: reg_json
+stages:
+  - name: reg_json_out
+    query: SELECT json_get_str(j, 'k') AS s, strpos(j, 'v') AS p FROM reg_json
+"""
+        ),
+    )
+    row = result.result.collect()[0]
+    assert (row.s, row.p) == ("v", 7)
